@@ -33,6 +33,7 @@ from .operators.schemas import (
     W2_FIELDS,
     line_patterns,
 )
+from .static_columns import build_once
 from .streaming.ingest import ingest_transform
 
 DOC_TYPE_FIELDS = {
@@ -78,20 +79,21 @@ def classify_documents(
     codebook is unused: results stay exact. The result holds two
     persisted chunk-embedding frames (``_cached_deps``); long-lived
     sessions should call ``api.release(result)`` after collecting."""
-    enc = encoder or hashing_encoder_udf(dim)
+    if encoder is None:
+        # The default encoder's column depends on dim only: build its
+        # UDF (a pickled closure shipped to the JVM) once per JVM.
+        encoded = build_once(
+            ("hashing_encoder", dim), lambda: _embedding_cols(hashing_encoder_udf(dim))
+        )
+    else:
+        encoded = _embedding_cols(encoder)
 
     def embed(df: DataFrame, extra: list[str]) -> DataFrame:
         ch = explode_chunks(
             df, text_col="text", id_cols=["doc_id", *extra],
             chunk_size=chunk_size, overlap=overlap,
         )
-        # chunk key: 64-bit hash of (doc_id, chunk_idx) — works for any
-        # doc_id type and any chunk count (collision odds ~2^-64/pair)
-        return ch.select(
-            "doc_id", *extra,
-            F.xxhash64(F.col("doc_id"), F.col("chunk_idx")).alias("cid"),
-            enc(F.col("chunk_text")).alias("embedding"),
-        )
+        return ch.select("doc_id", *extra, *encoded)
 
     q = embed(query_docs, []).select(
         F.col("cid").alias("query_id"), F.col("doc_id").alias("qdoc"), "embedding"
@@ -131,6 +133,16 @@ def classify_documents(
     return out
 
 
+def _embedding_cols(enc) -> list[Column]:
+    """The chunk key and embedding columns of ``classify_documents``.
+    The chunk key is a 64-bit hash of (doc_id, chunk_idx): it works for
+    any doc_id type and any chunk count (collision odds ~2^-64/pair)."""
+    return [
+        F.xxhash64(F.col("doc_id"), F.col("chunk_idx")).alias("cid"),
+        enc(F.col("chunk_text")).alias("embedding"),
+    ]
+
+
 def extract_documents(
     docs: DataFrame,
     doc_type: str,
@@ -139,28 +151,43 @@ def extract_documents(
     """Deterministic line-pattern extraction with the doc type's fixed
     field schema (swap in a model stage via operators/extract for
     production). ``normalize=True`` applies the §2.7 post-processors to
-    the fields they own (money/date/acct/vendor)."""
+    the fields they own (money/date/acct/vendor); that projection
+    depends on ``doc_type`` only and is built once per JVM
+    (``static_columns.build_once``)."""
     fields = DOC_TYPE_FIELDS[doc_type]
     out = extract_fields(docs, line_patterns(fields))
     if not normalize:
         return out
-    norms: dict[str, Column] = {}
+    parse, show = build_once(("normalized", doc_type), lambda: _normalized_projection(fields))
+    return out.select(*parse).select(*show)
+
+
+def _normalized_projection(fields: list[str]) -> tuple[list[Column], list[Column]]:
+    """The two selects of a normalized extraction. Money is projected
+    in two steps, ``money_decimal`` then ``format_money``: the format
+    references its input three times, so composing the two in one
+    select (``money_or_null``) would put three copies of every parse
+    in the plan. Every other field is normalized in the first select
+    and passed through by the second."""
+    parse, show = [F.col("doc_id")], [F.col("doc_id")]
     for f in fields:
         lf = f.lower()
         col = F.col(f"`{f}`")
         if "date" in lf:
-            norms[f] = N.date_sane(col)
+            norm = N.date_sane(col)
         elif any(t in lf for t in ("amount", "charges", "credits", "due", "wage", "withhold", "tips")):
-            norms[f] = N.money_or_null(col)
+            parse.append(N.money_decimal(col).alias(f))
+            show.append(N.format_money(col).alias(f))
+            continue
         elif "account" in lf and "number" in lf:
-            norms[f] = N.acct_last4(col)
+            norm = N.acct_last4(col)
         elif "vendor" in lf:
-            norms[f] = N.normalize_vendor(col)
+            norm = N.normalize_vendor(col)
         else:
-            norms[f] = F.trim(col)
-    return out.select(
-        "doc_id", *[norms[f].alias(f) for f in fields]
-    )
+            norm = F.trim(col)
+        parse.append(norm.alias(f))
+        show.append(col)
+    return parse, show
 
 
 def curate_corpus(

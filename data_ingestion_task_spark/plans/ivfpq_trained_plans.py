@@ -201,10 +201,14 @@ def _trained_lifecycle(
     # conf is restored before any corpus-sized search stage runs.
     #
     # Materialize the sample BEFORE narrowing: the corpus-wide
-    # orderBy().limit() scan then runs at session width (it plans as a
-    # shuffle-free TakeOrderedAndProject today, but a future
-    # sort-fallback plan would otherwise run a corpus-sized exchange at
-    # ~1 partition), and tools/profile_trained.py — which materializes
+    # orderBy().limit() scan then runs at session width. Below
+    # spark.sql.execution.topKSortFallbackThreshold it plans as a
+    # shuffle-free TakeOrderedAndProject; a cap at or above it plans
+    # today as a global sort with a corpus-sized range exchange, which
+    # would otherwise run at ~1 partition. Spark 4's default threshold
+    # (2^31 - 16) is never reached, but a session that lowers it (e.g.
+    # to 10,000) gets the sort plan for every corpus-tracking scaled cap
+    # above that. And tools/profile_trained.py — which materializes
     # the sample before narrowing — mirrors the executed plan (ADVICE
     # r12 #1).
     smp.count()

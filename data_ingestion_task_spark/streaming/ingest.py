@@ -29,12 +29,13 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
 from ..functions.text import char_len, fingerprint_md5, lang_id, quality_score, word_len
+from ..static_columns import build_once
 
 
 def ingest_transform(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -42,18 +43,22 @@ def ingest_transform(df: DataFrame, extra_cols: tuple[str, ...] = ()) -> DataFra
     guess, quality score. Pure column expressions — identical under
     batch and streaming execution. ``extra_cols`` names pass-through
     columns a caller added upstream (e.g. the redacting sink's
-    provenance count)."""
-    return df.select(
-        "doc_id",
-        "text",
-        "source",
-        *extra_cols,
-        char_len(F.col("text")).alias("char_len"),
-        word_len(F.col("text")).alias("word_len"),
-        fingerprint_md5(F.col("text")).alias("fingerprint"),
-        lang_id(F.col("text")).alias("lang_guess"),
-        quality_score(F.col("text")).alias("quality"),
-    )
+    provenance count). The projection is built once per JVM
+    (``static_columns.build_once``): it depends on ``extra_cols`` only."""
+    key = ("ingest_transform", tuple(extra_cols))
+    return df.select(*build_once(key, lambda: _consolidation(key[1])))
+
+
+def _consolidation(extra_cols: tuple[str, ...]) -> list[Column]:
+    text = F.col("text")
+    return [
+        *map(F.col, ("doc_id", "text", "source", *extra_cols)),
+        char_len(text).alias("char_len"),
+        word_len(text).alias("word_len"),
+        fingerprint_md5(text).alias("fingerprint"),
+        lang_id(text).alias("lang_guess"),
+        quality_score(text).alias("quality"),
+    ]
 
 
 def document_stream(spark: SparkSession, inbox: str, schema: StructType) -> DataFrame:

@@ -215,3 +215,170 @@ def test_confirm_payload_service_contract(spark):
     })
     assert no["decision"] == "no" and no["n_matches"] == 0
     assert "first name differs" in no["explanation"]
+
+
+# ---------------------------------------------------------------------------
+# The normalized projection is built once per JVM (static_columns)
+# ---------------------------------------------------------------------------
+
+#: Adversarial values per field kind; field i of doc j gets value
+#: (i + j) mod len, so every field sees every value across the docs.
+_ADVERSARIAL = {
+    "money": [
+        "-$1,053.75", "(12.50)", "45.00 CR", "7.25-", "$ 3", ".5", "-", "n/a", "1.2.3",
+        "$1,000,000.00",
+    ],
+    "date": ["1/2/2020", "Jan 5, 2021", "2019-12-31", "13/45/2020", "1/1/1850", "12/31/2999", "soon"],
+    "account": ["xxxx1234", "XX9876", "ending in: 5678", "ending in4321", "123456789", "x12"],
+    "vendor": ["Capital   One", "bank of america", "WELLS fargo", "  Initech  ", "Capital-One"],
+    "other": ["  Ann  B ", "x", "12 Maple St", "$5.00"],
+}
+
+
+def _field_kind(field: str) -> str:
+    """The field-to-normalizer rule of the facade's docstring: dates,
+    money (amount/charges/credits/due/wage/withhold/tips), masked
+    account numbers, vendors; everything else is trimmed."""
+    lf = field.lower()
+    if "date" in lf:
+        return "date"
+    if any(t in lf for t in ("amount", "charges", "credits", "due", "wage", "withhold", "tips")):
+        return "money"
+    if "account" in lf and "number" in lf:
+        return "account"
+    return "vendor" if "vendor" in lf else "other"
+
+
+def _adversarial_docs(spark, fields, n_docs=10):
+    rows = []
+    for j in range(n_docs):
+        lines = []
+        for i, f in enumerate(fields):
+            vals = _ADVERSARIAL[_field_kind(f)]
+            if (i + j) % 7 == 3:
+                continue  # a missing line: NULL through every normalizer
+            lines.append(f"{f}: {vals[(i + j) % len(vals)]}")
+        rows.append((j, "\n".join(lines)))
+    return spark.createDataFrame(rows, "doc_id bigint, text string")
+
+
+def test_extract_documents_matches_per_field_normalizers(spark):
+    """For every doc type, the normalized projection equals composing
+    the existing normalizers per field in one select (``money_or_null``
+    for money) over the unnormalized extraction."""
+    from data_ingestion_task_spark.functions import normalize as N
+
+    per_kind = {
+        "date": N.date_sane, "money": N.money_or_null, "account": N.acct_last4,
+        "vendor": N.normalize_vendor, "other": F.trim,
+    }
+    for doc_type, fields in api.DOC_TYPE_FIELDS.items():
+        docs = _adversarial_docs(spark, fields)
+        raw = api.extract_documents(docs, doc_type, normalize=False)
+        want = raw.select(
+            "doc_id", *[per_kind[_field_kind(f)](F.col(f"`{f}`")).alias(f) for f in fields]
+        )
+        got = api.extract_documents(docs, doc_type)
+        assert got.columns == want.columns
+        assert got.dtypes == want.dtypes
+        got_rows, want_rows = sorted(got.collect()), sorted(want.collect())
+        assert got_rows == want_rows, doc_type
+        # the fixture reaches both NULL and non-NULL results of every kind
+        for f in fields:
+            seen = {r[f] is None for r in got_rows}
+            assert seen == {True, False}, (doc_type, f)
+
+
+def test_extract_documents_repeat_call_reuses_projection(spark):
+    from data_ingestion_task_spark import static_columns
+
+    docs = _adversarial_docs(spark, api.DOC_TYPE_FIELDS["pbst"])
+    first = sorted(api.extract_documents(docs, "pbst").collect())
+    built = static_columns._BUILT[("normalized", "pbst")]
+    second = sorted(api.extract_documents(docs, "pbst").collect())
+    assert static_columns._BUILT[("normalized", "pbst")] is built
+    assert second == first
+
+
+def test_build_once_never_crosses_gateways(spark, monkeypatch):
+    """An entry is reused only under the gateway and SparkContext it
+    was built under; any other owner rebuilds."""
+    from pyspark import SparkContext
+
+    from data_ingestion_task_spark import static_columns
+
+    assert static_columns._owner() == (SparkContext._gateway, SparkContext._active_spark_context)
+    calls = []
+
+    def build():
+        calls.append(1)
+        return object()
+
+    key = ("test_build_once_never_crosses_gateways",)
+    gw_a, gw_b = object(), object()
+    monkeypatch.setattr(static_columns, "_owner", lambda: (gw_a, None))
+    a = static_columns.build_once(key, build)
+    assert static_columns.build_once(key, build) is a and len(calls) == 1
+    monkeypatch.setattr(static_columns, "_owner", lambda: (gw_b, None))
+    b = static_columns.build_once(key, build)
+    assert b is not a and len(calls) == 2
+    monkeypatch.setattr(static_columns, "_owner", lambda: (gw_a, None))
+    assert static_columns.build_once(key, build) is not a and len(calls) == 3
+    static_columns._BUILT.pop(key)
+
+
+def test_w2_plan_parses_each_money_field_once(spark):
+    """The money format step reads the parsed DECIMAL column, so the W2
+    analyzed plan holds one ``money_decimal`` tree per money field,
+    not the three that ``format_money(money_decimal(x))`` inlines."""
+    from data_ingestion_task_spark.functions import normalize as N
+
+    strip = "[^0-9.]"  # money_decimal's digit-strip regexp_replace pattern
+    docs = spark.createDataFrame([(1, "BOX1_WAGES: 1.00")], "doc_id bigint, text string")
+
+    def strips(df):
+        return df._jdf.queryExecution().analyzed().toString().count(strip)
+
+    per_parse = strips(docs.select(N.money_decimal(F.col("text")).alias("m")))
+    assert per_parse >= 1
+    money = [f for f in api.DOC_TYPE_FIELDS["w2"] if _field_kind(f) == "money"]
+    assert len(money) == 12
+    assert strips(api.extract_documents(docs, "w2")) == per_parse * len(money)
+
+
+def test_extract_documents_from_many_threads(spark):
+    """Threads share the built projections: concurrent facade calls on
+    one session, each building on an empty memo, all return the serial
+    result."""
+    import sys
+    import threading
+
+    from data_ingestion_task_spark import static_columns
+
+    docs = {t: _adversarial_docs(spark, f, n_docs=4) for t, f in api.DOC_TYPE_FIELDS.items()}
+    want = {t: sorted(api.extract_documents(d, t).collect()) for t, d in docs.items()}
+    for t in docs:
+        static_columns._BUILT.pop(("normalized", t), None)
+    got, errors = [], []
+
+    def worker(i):
+        t = list(docs)[i % len(docs)]
+        try:
+            got.append((t, sorted(api.extract_documents(docs[t], t).collect())))
+        except Exception as e:  # reported by the assertion below
+            errors.append(repr(e))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(i,)) for i in range(9)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=300)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert not errors
+    assert len(got) == 9
+    assert all(rows == want[t] for t, rows in got)
