@@ -79,21 +79,20 @@ def classify_documents(
     codebook is unused: results stay exact. The result holds two
     persisted chunk-embedding frames (``_cached_deps``); long-lived
     sessions should call ``api.release(result)`` after collecting."""
-    if encoder is None:
-        # The default encoder's column depends on dim only: build its
-        # UDF (a pickled closure shipped to the JVM) once per JVM.
-        encoded = build_once(
-            ("hashing_encoder", dim), lambda: _embedding_cols(hashing_encoder_udf(dim))
-        )
-    else:
-        encoded = _embedding_cols(encoder)
+    enc = encoder or hashing_encoder_udf(dim)
 
     def embed(df: DataFrame, extra: list[str]) -> DataFrame:
         ch = explode_chunks(
             df, text_col="text", id_cols=["doc_id", *extra],
             chunk_size=chunk_size, overlap=overlap,
         )
-        return ch.select("doc_id", *extra, *encoded)
+        # chunk key: 64-bit hash of (doc_id, chunk_idx) — works for any
+        # doc_id type and any chunk count (collision odds ~2^-64/pair)
+        return ch.select(
+            "doc_id", *extra,
+            F.xxhash64(F.col("doc_id"), F.col("chunk_idx")).alias("cid"),
+            enc(F.col("chunk_text")).alias("embedding"),
+        )
 
     q = embed(query_docs, []).select(
         F.col("cid").alias("query_id"), F.col("doc_id").alias("qdoc"), "embedding"
@@ -133,16 +132,6 @@ def classify_documents(
     return out
 
 
-def _embedding_cols(enc) -> list[Column]:
-    """The chunk key and embedding columns of ``classify_documents``.
-    The chunk key is a 64-bit hash of (doc_id, chunk_idx): it works for
-    any doc_id type and any chunk count (collision odds ~2^-64/pair)."""
-    return [
-        F.xxhash64(F.col("doc_id"), F.col("chunk_idx")).alias("cid"),
-        enc(F.col("chunk_text")).alias("embedding"),
-    ]
-
-
 def extract_documents(
     docs: DataFrame,
     doc_type: str,
@@ -165,8 +154,8 @@ def extract_documents(
 def _normalized_projection(fields: list[str]) -> tuple[list[Column], list[Column]]:
     """The two selects of a normalized extraction. Money is projected
     in two steps, ``money_decimal`` then ``format_money``: the format
-    references its input three times, so composing the two in one
-    select (``money_or_null``) would put three copies of every parse
+    references its input four times, so composing the two in one
+    select (``money_or_null``) would put four copies of every parse
     in the plan. Every other field is normalized in the first select
     and passed through by the second."""
     parse, show = [F.col("doc_id")], [F.col("doc_id")]

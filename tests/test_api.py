@@ -330,7 +330,7 @@ def test_build_once_never_crosses_gateways(spark, monkeypatch):
 def test_w2_plan_parses_each_money_field_once(spark):
     """The money format step reads the parsed DECIMAL column, so the W2
     analyzed plan holds one ``money_decimal`` tree per money field,
-    not the three that ``format_money(money_decimal(x))`` inlines."""
+    not the four that ``format_money(money_decimal(x))`` inlines."""
     from data_ingestion_task_spark.functions import normalize as N
 
     strip = "[^0-9.]"  # money_decimal's digit-strip regexp_replace pattern
@@ -341,6 +341,7 @@ def test_w2_plan_parses_each_money_field_once(spark):
 
     per_parse = strips(docs.select(N.money_decimal(F.col("text")).alias("m")))
     assert per_parse >= 1
+    assert strips(docs.select(N.money_or_null(F.col("text")).alias("m"))) == 4 * per_parse
     money = [f for f in api.DOC_TYPE_FIELDS["w2"] if _field_kind(f) == "money"]
     assert len(money) == 12
     assert strips(api.extract_documents(docs, "w2")) == per_parse * len(money)

@@ -1,12 +1,12 @@
 """Driver-side profile of one warm pass of the doc facade loop.
 
-    python3 tools/profile_facade.py [--seed 1] [--warm 3] [--json]
+    python3 tools/profile_facade.py [--seed 1]
 
 Runs the benchmark's ``doc_pipeline`` pass (perfbench/workloads.py:
 load_table → ingest → split → classify → extract ×3 → confirm →
 evaluate over generated W2 / PBST / invoice pages) under the
-benchmark's own session settings, makes ``--warm`` checked warm-up
-passes, then profiles one more checked pass. For every facade call it
+benchmark's own session settings, makes the benchmark's checked
+warm-up passes, then profiles one more checked pass. For every facade call it
 prints:
 
 - ``build_s`` — wall time inside the ``api.*`` call itself, which
@@ -181,11 +181,9 @@ def rows(prof: Profile, jobs: list[tuple[float, float]]) -> list[dict]:
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter)
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--warm", type=int, default=3, help="checked warm-up passes before the profiled one")
-    ap.add_argument("--json", action="store_true", help="print the rows as one JSON object instead")
     args = ap.parse_args(argv)
 
-    from perfbench.run import OUT, pin_env, start_session, stop_session
+    from perfbench.run import OUT, WARMUP_PASSES, pin_env, start_session, stop_session
 
     work = os.path.join(OUT, "work", f"profile-facade-{args.seed}-{os.getpid()}")
     pin_env(work)
@@ -200,7 +198,7 @@ def main(argv: list[str] | None = None) -> int:
         spark = start_session(work)
         w.setup(spark)
         w.expected(spark)
-        for i in range(args.warm):
+        for i in range(WARMUP_PASSES):
             errs = w.check(w.run_pass(spark, Tracer("warm", False)))
             if errs:
                 raise SystemExit(f"warm-up pass {i} failed its check: {errs}")
@@ -227,10 +225,6 @@ def main(argv: list[str] | None = None) -> int:
             stop_session(spark)
         shutil.rmtree(work, ignore_errors=True)
 
-    total = {"pass_s": pass_s, "round_trips": pass_rt, "jobs": n_jobs, "idle_s": idle}
-    if args.json:
-        print(json.dumps({"calls": table, "pass": total}))
-        return 0
     print(f"{'call':28s} {'wall_s':>7s} {'build_s':>7s} {'build_rt':>8s} {'action_s':>8s} "
           f"{'action_rt':>9s} {'jobs':>4s} {'idle_s':>6s}")
     for r in table:
